@@ -218,7 +218,7 @@ def _topk_df(engine: SearchEngine, query: str, **kw) -> DataFrame:
     # opts into the driver-local fast path — bm25_topk_local_exec pins
     # that one; results are bit-identical either way (test_local_exec)
     kw.setdefault("local", False)
-    r = engine.search(query, **kw)
+    r = engine.search(query, **kw).to_spark()
     return r.select(
         F.col("rank").cast("long").alias("rank"),
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -470,10 +470,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _corpus(spark, sf), max_tokens=64, overlap=16
         ).select("doc_id", "chunk_id", "n_chunk_tokens", "chunk_text")
 
-    def _phrase_df(spark, sf, local):
-        return _engine(spark, sf).phrase_search(
+    def _phrase_df(engine, local=None):
+        return engine.phrase_search(
             Q_PHRASE, k=10, local=local
-        ).select(
+        ).to_spark().select(
             F.col("rank").cast("long").alias("rank"),
             F.col("doc_id").cast("long").alias("doc_id"),
             F.round(F.col("score"), 6).alias("score"),
@@ -483,23 +483,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def phrase_topk(spark, sf):
         # exact-phrase top-k over the positional index — DISTRIBUTED
         # plan pinned (the auto gate would route this corpus local)
-        return _phrase_df(spark, sf, local=False)
+        return _phrase_df(_engine(spark, sf), local=False)
 
     def phrase_topk_local(spark, sf):
         # the driver-local phrase fast path under the same SQL oracle
-        return _phrase_df(spark, sf, local=True)
+        return _phrase_df(_engine(spark, sf), local=True)
 
     def phrase_topk_sharded(spark, sf):
         # scatter-gather phrase over the 3-shard index (global phrase_df
         # summed across shards, global stats injected) — same SQL oracle
-        return _sharded_engine(spark, sf).phrase_search(
-            Q_PHRASE, k=10
-        ).select(
-            F.col("rank").cast("long").alias("rank"),
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.round(F.col("score"), 6).alias("score"),
-            F.col("phrase_tf").cast("long").alias("phrase_tf"),
-        )
+        return _phrase_df(_sharded_engine(spark, sf))
 
     def bm25_topk_compressed(spark, sf):
         # VByte/Unary-compressed index, same oracle SQL as the raw path:

@@ -27,6 +27,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_heap() -> str:
+    """A quarter of the box's RAM, 1-16 GiB: the 16 GiB the r01-r05 runs
+    used on a 125 GiB box, without overcommitting a smaller one."""
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{int(max(1, min(16, ram_gib // 4)))}g"
+
+
 def make_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -36,7 +43,7 @@ def make_spark(cpus: int):
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", driver_heap()))
         # G1 shows 2x run-to-run variance on this allocation-heavy
         # workload (see BASELINE.md); ParallelGC is stable and faster
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")

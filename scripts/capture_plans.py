@@ -81,7 +81,7 @@ def main() -> None:
     comp = SearchEngine(spark, idx_comp)
 
     def dump(title, note, df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = df.to_spark()._jdf.queryExecution().executedPlan().toString()
         print(f"\n### {title}\n\n{note}\n\n```\n{_clip(plan)}\n```")
         return plan
 
@@ -107,7 +107,7 @@ def main() -> None:
         "once; coverage is the one-hot bit_or single aggregate, not a "
         "count(distinct) double aggregate; no Window.partitionBy() "
         "funneling every match through one task.",
-        raw.phrase_search("merge column", k=10),
+        raw.phrase_search("merge column", k=10, local=False),
     )
     # the only Window allowed is the rank projection ABOVE the top-k
     # (it sees <= k rows); nothing below TakeOrderedAndProject — i.e. on

@@ -7,7 +7,8 @@ VM: query_phrase, dedup_embedding_pairs, query_batch_1000_amortized.
 This script measures each entry with BOTH code versions, INTERLEAVED
 (r3, r4, r3, r4, ...) in fresh subprocesses on the current box, and
 prints a best-of/median table for BASELINE.md — the same protocol the
-r3 build controls used.
+r3 build controls used. Exits non-zero when the two versions' result
+checks differ: their timings would compare different answers.
 
 Usage:
   git worktree add /tmp/r3code <r3-commit>
@@ -183,11 +184,9 @@ def main() -> None:
                       f"{[round(x, 4) for x in res['times']]}",
                       file=sys.stderr)
         if checks[lo] != checks[ln]:
-            # old and new code may legitimately answer through different
-            # plans (e.g. the r5 driver-local fast path changes nothing
-            # in results — then this is a hard failure — but a missing
-            # fixture or changed default is surfaced rather than hidden)
-            print(f"WARNING {what}: result check differs {checks}",
+            # timings of versions that answer differently compare
+            # nothing: reported here, and the run exits non-zero below
+            print(f"MISMATCH {what}: result check differs {checks}",
                   file=sys.stderr)
         table[what] = {
             f"{lo}_best": round(min(per[lo]), 4),
@@ -199,6 +198,9 @@ def main() -> None:
         }
         print(f"{what}: {table[what]}", file=sys.stderr)
     print(json.dumps(table, indent=2))
+    differ = [w for w, row in table.items() if not row["result_check_equal"]]
+    if differ:
+        sys.exit(f"result checks differ between versions: {differ}")
 
 
 if __name__ == "__main__":

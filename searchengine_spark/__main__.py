@@ -76,18 +76,11 @@ def cmd_query(args) -> None:
     spark = _spark(args.cpus)
     engine = _open_engine(spark, args.index)
     if args.phrase:
-        result = engine.phrase_search(args.text, k=args.k)
-        doct = (
-            engine.engines[0].doctable
-            if hasattr(engine, "engines")
-            else engine.doctable
+        # same doctable lookup as search(with_docno=True): shard engines
+        # of a sharded index, else the engine itself
+        result = engine.phrase_search(args.text, k=args.k).with_docno(
+            getattr(engine, "engines", [engine])
         )
-        if hasattr(engine, "engines"):
-            for e in engine.engines[1:]:
-                doct = doct.unionByName(e.doctable)
-        result = doct.select("doc_id", "docno").join(
-            result, "doc_id"
-        ).select("rank", "doc_id", "docno", "score")
     else:
         # SearchEngine and ShardedSearchEngine share this signature
         # (sharded degrades maxscore to DAAT — identical results)

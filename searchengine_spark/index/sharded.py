@@ -41,17 +41,18 @@ rebuild-with-global-stats pass could re-enable MaxScore per shard.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
 from typing import Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..query.engine import SearchEngine
+from ..query.result import PHRASE, TOPK, SearchResult, top_k
 from ..sources.corpus import assign_doc_ids, filter_malformed, with_sha256
 from .builder import IndexBuilder
 
@@ -111,10 +112,11 @@ class ShardedSearchEngine:
     """Scatter-gather top-k over a sharded index.
 
     The gather side needs only per-shard top-k rows (k * n_shards rows
-    total), so the merge is a driver-side re-sort when every shard runs
-    the driver-local fast path, or a union + TakeOrderedAndProject when
-    any shard's slice overflows the local gate — the per-shard subtrees
-    are independent branches of ONE Spark job either way."""
+    total), so the merge is a driver-side numpy re-sort when every
+    shard runs the driver-local fast path (a ``"local"`` SearchResult:
+    no Spark job), or a union + TakeOrderedAndProject when any shard's
+    slice overflows the local gate — the per-shard subtrees are
+    independent branches of ONE Spark job."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
@@ -160,38 +162,25 @@ class ShardedSearchEngine:
         algo: str = "daat",
         with_docno: bool = False,
         local: Optional[bool] = None,
-    ) -> DataFrame:
+    ) -> SearchResult:
         """Global top-k: fan out to every shard (per-shard k — see module
         docstring for why that suffices), merge by (score desc, doc_id
-        asc), keep k. Returns (rank, doc_id, score) bit-identical in
-        doc_ids/scores to a single-index DAAT run up to idf's last ulp
-        (idf is recomputed from the exact global df). ``algo`` is
+        asc), keep k. Returns a :class:`SearchResult` of (rank, doc_id
+        [, docno], score), bit-identical in doc_ids/scores to a
+        single-index DAAT run up to idf's last ulp (idf is recomputed
+        from the exact global df), routed like SearchEngine.search:
+        ``"local"`` merges the shards' driver-side top-k in numpy (no
+        Spark job), ``"distributed"`` unions the per-shard plans,
+        ``"empty"`` answers a query no shard can match. ``algo`` is
         accepted for SearchEngine API parity; ``maxscore`` degrades to
         DAAT here (results identical — MaxScore only prunes): the
         persisted per-block maxima embed each shard's LOCAL idf, which
         is not an upper bound under the injected global idf (module
         docstring)."""
         del algo
-
-        def _finish(result: DataFrame) -> DataFrame:
-            if not with_docno:
-                return result
-            # broadcast the k-row result and stream the (unioned) shard
-            # doctables past it — same shape as SearchEngine.search
-            doct = self.engines[0].doctable.select("doc_id", "docno")
-            for e in self.engines[1:]:
-                doct = doct.unionByName(e.doctable.select("doc_id", "docno"))
-            return doct.join(F.broadcast(result), "doc_id").select(
-                "rank", "doc_id", "docno", "score"
-            )
-
         terms = self.tokenize_query(query)
         gstats, per_shard = self._global_term_stats(terms)
         terms = [t for t in terms if t in gstats]
-        if not terms:
-            return _finish(self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            ))
         shard_terms: list[list[str]] = []
         for sstats in per_shard:
             ts = [t for t in terms if t in sstats]
@@ -211,52 +200,32 @@ class ShardedSearchEngine:
             ):
                 use_local = False
 
-        if use_local:
-            parts = []
-            for e, ts, sstats in zip(self.engines, shard_terms, per_shard):
-                if not ts:
-                    continue
-                sub = {t: {**sstats[t], "idf": gstats[t]["idf"]} for t in ts}
-                pdf = e._local_topk(ts, sub, scorer, mode, "daat", k)
-                if len(pdf):
-                    parts.append(pdf)
-            if not parts:
-                return self.spark.createDataFrame(
-                    [], "rank int, doc_id long, score double"
-                )
-            merged = pd.concat(parts, ignore_index=True)
-            merged = merged.sort_values(
-                ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-            ).head(k)
-            merged["rank"] = range(1, len(merged) + 1)
-            return _finish(self.engines[0]._local_df(
-                merged[["rank", "doc_id", "score"]]
-            ))
-
-        parts_df = []
+        parts = []
         for e, ts, sstats in zip(self.engines, shard_terms, per_shard):
             if not ts:
                 continue
             sub = {t: {**sstats[t], "idf": gstats[t]["idf"]} for t in ts}
-            if mode == "conjunctive":
-                topk = e._conjunctive(ts, sub, scorer, k)
+            if use_local:
+                parts.append(e._local_topk(ts, sub, scorer, mode, "daat", k))
             else:
-                topk = e._daat(ts, sub, scorer, k)
-            parts_df.append(topk.select("doc_id", "score"))
-        if not parts_df:
-            return _finish(self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            ))
-        union = parts_df[0]
-        for p in parts_df[1:]:
-            union = union.unionByName(p)
-        merged = union.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return _finish(
-            merged.withColumn("rank", F.row_number().over(w)).select(
-                "rank", "doc_id", "score"
+                plan = e._conjunctive if mode == "conjunctive" else e._daat
+                parts.append(plan(ts, sub, scorer, k).select("doc_id", "score"))
+        if not parts:
+            result = SearchResult(self.spark, TOPK)
+        elif use_local:
+            result = SearchResult(self.spark, TOPK, top_k(parts, "score", k))
+        else:
+            union = functools.reduce(DataFrame.unionByName, parts)
+            merged = union.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+            result = SearchResult(
+                self.spark,
+                TOPK,
+                merged.withColumn("rank", F.row_number().over(w)).select(
+                    "rank", "doc_id", "score"
+                ),
             )
-        )
+        return result.with_docno(self.engines) if with_docno else result
 
     def batch_search(
         self,
@@ -293,9 +262,7 @@ class ShardedSearchEngine:
             )
             for e in self.engines
         ]
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
+        union = functools.reduce(DataFrame.unionByName, parts)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -308,9 +275,11 @@ class ShardedSearchEngine:
 
     def phrase_search(
         self, phrase: str, k: int = 10, local: Optional[bool] = None
-    ) -> DataFrame:
+    ) -> SearchResult:
         """Scatter-gather exact-phrase top-k (requires shards built with
-        ``positions=True``). Identical to a single-index phrase query:
+        ``positions=True``) as a :class:`SearchResult` of (rank, doc_id,
+        score, phrase_tf), routed like SearchEngine.phrase_search.
+        Identical to a single-index phrase query:
 
         * a matching doc lives wholly in one shard, so every shard whose
           lexicon misses any phrase term contributes nothing (and a term
@@ -330,24 +299,14 @@ class ShardedSearchEngine:
                 "no positional index: build with EngineConfig(positions=True)"
             )
         terms = self.engines[0].tokenize_phrase(phrase)
-
-        def empty() -> DataFrame:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double, phrase_tf int"
-            )
-
-        if not terms:
-            return empty()
         per_shard = [e._term_stats(terms) for e in self.engines]
-        if any(all(t not in s for s in per_shard) for t in set(terms)):
-            return empty()  # globally unknown term: strict semantics
         participating = [
             (e, s)
             for e, s in zip(self.engines, per_shard)
             if all(t in s for t in terms)
         ]
-        if not participating:
-            return empty()
+        if not terms or not participating:
+            return SearchResult(self.spark, PHRASE)
 
         use_local = local
         if use_local is None:
@@ -358,40 +317,21 @@ class ShardedSearchEngine:
             # (it reads every participating shard's slices); per-shard
             # layout must carry doc_len like the single-engine gate
             use_local = total_cf <= SearchEngine.LOCAL_EXEC_MAX_POSTINGS and all(
-                "doc_len" in e._positions_dataset().schema.names
+                "doc_len" in e._dataset("positions").schema.names
                 for e, _s in participating
             )
 
         if use_local:
-            parts = []
-            df_total = 0
-            for e, _s in participating:
-                pdf, n = e._local_phrase(terms, k, raw=True)
-                df_total += n
-                if len(pdf):
-                    parts.append(pdf)
-            if not parts or df_total == 0:
-                return empty()
-            merged = (
-                pd.concat(parts, ignore_index=True)
-                .sort_values(
-                    ["partial", "doc_id"],
-                    ascending=[False, True],
-                    kind="mergesort",
-                )
-                .head(k)
-            )
-            idf = math.log10(float(self.stats["n_docs"]) / df_total)
-            rows = ",".join(
-                f"({r + 1}, {int(d)}L, CAST('{float(p) * idf!r}' AS DOUBLE),"
-                f" {int(tf)})"
-                for r, (d, p, tf) in enumerate(
-                    zip(merged["doc_id"], merged["partial"], merged["phrase_tf"])
-                )
-            )
-            return self.spark.sql(
-                f"SELECT * FROM VALUES {rows} "
-                "AS t(rank, doc_id, score, phrase_tf)"
+            found = [e._local_phrase(terms) for e, _s in participating]
+            return SearchResult(
+                self.spark,
+                PHRASE,
+                SearchEngine._phrase_rows(
+                    [hit for hit, _n in found],
+                    sum(n for _hit, n in found),
+                    self.stats["n_docs"],
+                    k,
+                ),
             )
 
         topks, dfrows = [], []
@@ -399,13 +339,8 @@ class ShardedSearchEngine:
             t, d = e.phrase_search(phrase, k=k, local=False, _raw=True)
             topks.append(t)
             dfrows.append(d)
-        union = topks[0]
-        for t in topks[1:]:
-            union = union.unionByName(t)
-        dfu = dfrows[0]
-        for d in dfrows[1:]:
-            dfu = dfu.unionByName(d)
-        total_row = dfu.agg(
+        union = functools.reduce(DataFrame.unionByName, topks)
+        total_row = functools.reduce(DataFrame.unionByName, dfrows).agg(
             F.sum("phrase_df").cast("long").alias("phrase_df")
         )
         merged = (
@@ -422,6 +357,10 @@ class ShardedSearchEngine:
             "phrase_tf",
         )
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return scored.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score", "phrase_tf"
+        return SearchResult(
+            self.spark,
+            PHRASE,
+            scored.withColumn("rank", F.row_number().over(w)).select(
+                "rank", "doc_id", "score", "phrase_tf"
+            ),
         )

@@ -58,6 +58,7 @@ from ..config import EngineConfig
 from ..functions.scoring import bm25_partial_expr, tfidf_partial_expr
 from ..functions.text import tokenize_query_py
 from ..index.builder import term_bucket_py
+from .result import PHRASE, TOPK, SearchResult, top_k
 
 
 class SearchEngine:
@@ -72,56 +73,35 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir.rstrip("/")
-        self.config = EngineConfig.load(self.index_dir)
-        with open(os.path.join(self.index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
+        # None = auto (engage when the query's postings fit the driver
+        # gate); True/False force. search(local=...) overrides per call.
+        self.local_exec: Optional[bool] = None
+        self._phrase_caches: list[DataFrame] = []
+        self.refresh()
+
+    def refresh(self) -> None:
+        """(Re)load the index: reset the per-term memo caches and read
+        the index frames. Call again after the index directory is updated
+        IN PLACE (e.g. streaming compaction into the same dir) — without
+        this, negative lexicon lookups memoized before the update would
+        keep treating newly indexed terms as absent."""
         self._lex_cache: dict[str, Optional[dict]] = {}
         self._block_max_cache: dict[str, list[dict]] = {}
         self._block_summary_cache: dict[str, Optional[dict]] = {}
         self._block_summary_full = False
         self._block_summary_should_load: Optional[bool] = None
-        self._phrase_caches: list[DataFrame] = []
+        self._retire_phrase_cache(None)
         self._lexicon_df: Optional[DataFrame] = None
         self._positions_df: Optional[DataFrame] = None
-        self._pa_postings = None
-        self._pa_lexicon = None
-        self._pa_positions = None
-        # None = auto (engage when the query's postings fit the driver
-        # gate); True/False force. search(local=...) overrides per call.
-        self.local_exec: Optional[bool] = None
-        self.postings = spark.read.parquet(os.path.join(self.index_dir, "postings"))
-        self.doctable = spark.read.parquet(os.path.join(self.index_dir, "doctable"))
-        # schema facts resolved ONCE (a .columns probe mid-query forces a
-        # fresh analysis pass — measurable per-query planning cost)
-        self._has_block_range = "min_doc_id" in self.postings.columns
-        self._decoded_has_doc_len = "doc_lens" in self.postings.columns
-
-    def refresh(self) -> None:
-        """Invalidate the per-term memo caches and re-read the index
-        frames. Call after the index directory is updated IN PLACE (e.g.
-        streaming compaction into the same dir) — without this, negative
-        lexicon lookups memoized before the update would keep treating
-        newly indexed terms as absent."""
-        self._lex_cache.clear()
-        self._block_max_cache.clear()
-        self._block_summary_cache.clear()
-        self._block_summary_full = False
-        self._block_summary_should_load = None
-        self._retire_phrase_cache(None)
-        self._lexicon_df = None
-        self._positions_df = None
-        self._pa_postings = None
-        self._pa_lexicon = None
-        self._pa_positions = None
+        self._pa: dict = {}  # table name -> pyarrow dataset (_dataset)
+        self.config = EngineConfig.load(self.index_dir)
         with open(os.path.join(self.index_dir, "stats.json")) as f:
             self.stats = json.load(f)
-        self.config = EngineConfig.load(self.index_dir)
-        self.postings = self.spark.read.parquet(
-            os.path.join(self.index_dir, "postings")
-        )
-        self.doctable = self.spark.read.parquet(
-            os.path.join(self.index_dir, "doctable")
-        )
+        read = self.spark.read.parquet
+        self.postings = read(os.path.join(self.index_dir, "postings"))
+        self.doctable = read(os.path.join(self.index_dir, "doctable"))
+        # schema facts resolved ONCE (a .columns probe mid-query forces a
+        # fresh analysis pass — measurable per-query planning cost)
         self._has_block_range = "min_doc_id" in self.postings.columns
         self._decoded_has_doc_len = "doc_lens" in self.postings.columns
 
@@ -160,51 +140,31 @@ class SearchEngine:
 
     # ---------- plumbing ----------
 
-    def _postings_dataset(self):
-        """Memoized pyarrow dataset handle for the postings table — the
+    def _dataset(self, name: str):
+        """Memoized pyarrow dataset handle for one index table
+        (postings, positions, lexicon, block_summary, doctable) — the
         file listing / hive-partition discovery is a per-query driver
         cost worth paying once per engine instance (refresh() resets)."""
-        if self._pa_postings is None:
+        if name not in self._pa:
             import pyarrow.dataset as ds
 
-            self._pa_postings = ds.dataset(
-                os.path.join(self.index_dir, "postings"),
+            self._pa[name] = ds.dataset(
+                os.path.join(self.index_dir, name),
                 format="parquet",
                 partitioning="hive",
             )
-        return self._pa_postings
+        return self._pa[name]
 
-    def _positions_dataset(self):
-        """Memoized pyarrow dataset handle for the positional table
-        (phrase fast path) — same once-per-engine listing trade as
-        _postings_dataset."""
-        if self._pa_positions is None:
-            import pyarrow.dataset as ds
-
-            self._pa_positions = ds.dataset(
-                os.path.join(self.index_dir, "positions"),
-                format="parquet",
-                partitioning="hive",
-            )
-        return self._pa_positions
-
-    def _lexicon_dataset(self):
-        if self._pa_lexicon is None:
-            import pyarrow.dataset as ds
-
-            self._pa_lexicon = ds.dataset(
-                os.path.join(self.index_dir, "lexicon"),
-                format="parquet",
-                partitioning="hive",
-            )
-        return self._pa_lexicon
+    def _buckets(self, terms) -> list[int]:
+        """The term_bucket partitions ``terms`` hash into."""
+        return sorted({term_bucket_py(t, self.config.n_term_buckets) for t in terms})
 
     def tokenize_query(self, text: str) -> list[str]:
         return tokenize_query_py(text, self.config)
 
     def _bucket_filter(self, terms: Sequence[str]):
-        buckets = sorted({term_bucket_py(t, self.config.n_term_buckets) for t in terms})
-        return F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms))
+        in_buckets = F.col("term_bucket").isin(self._buckets(terms))
+        return in_buckets & F.col("term").isin(list(terms))
 
     def _term_stats(self, terms: Sequence[str]) -> dict[str, dict]:
         """J5 dictionary probe: read the (tiny) lexicon rows for the query
@@ -227,12 +187,9 @@ class SearchEngine:
         if missing:
             import pyarrow.dataset as ds
 
-            dataset = self._lexicon_dataset()
-            buckets = sorted(
-                {term_bucket_py(t, self.config.n_term_buckets) for t in missing}
-            )
+            dataset = self._dataset("lexicon")
             tbl = dataset.to_table(
-                filter=ds.field("term_bucket").isin(buckets)
+                filter=ds.field("term_bucket").isin(self._buckets(missing))
                 & ds.field("term").isin(missing)
             )
             found = {r["term"]: r for r in tbl.to_pylist()}
@@ -253,12 +210,9 @@ class SearchEngine:
         if missing:
             import pyarrow.dataset as ds
 
-            dataset = self._postings_dataset()
-            buckets = sorted(
-                {term_bucket_py(t, self.config.n_term_buckets) for t in missing}
-            )
+            dataset = self._dataset("postings")
             tbl = dataset.to_table(
-                filter=ds.field("term_bucket").isin(buckets)
+                filter=ds.field("term_bucket").isin(self._buckets(missing))
                 & ds.field("term").isin(missing),
                 columns=["term", "n_postings", "block_max_bm25", "block_max_tfidf"],
             )
@@ -289,7 +243,7 @@ class SearchEngine:
         if missing or not terms:
             import pyarrow.dataset as ds
 
-            dataset = ds.dataset(summ_dir, format="parquet", partitioning="hive")
+            dataset = self._dataset("block_summary")
             # small summary table => load it ALL once and answer every
             # later probe from RAM — the reference's own move (the full
             # dictionary is RAM-resident before the first query,
@@ -325,11 +279,8 @@ class SearchEngine:
                     if self._block_summary_cache.get(t) is not None
                 }
             if missing:
-                buckets = sorted(
-                    {term_bucket_py(t, self.config.n_term_buckets) for t in missing}
-                )
                 tbl = dataset.to_table(
-                    filter=ds.field("term_bucket").isin(buckets)
+                    filter=ds.field("term_bucket").isin(self._buckets(missing))
                     & ds.field("term").isin(missing)
                 )
                 found = {r["term"]: r for r in tbl.to_pylist()}
@@ -406,18 +357,16 @@ class SearchEngine:
 
         bm_col = "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
         ub_key = "max_bm25" if scorer == "bm25" else "max_tfidf"
-        dataset = self._postings_dataset()
+        dataset = self._dataset("postings")
         expr = None
         for t in essential:
             thresh = theta - (total_ub - stats[t][ub_key])
             e = (ds.field("term") == t) & (ds.field(bm_col) >= thresh)
             expr = e if expr is None else (expr | e)
-        buckets = sorted(
-            {term_bucket_py(t, self.config.n_term_buckets) for t in essential}
-        )
         col = "doc_ids_vb" if self.config.compression else "doc_ids"
         tbl = dataset.to_table(
-            filter=ds.field("term_bucket").isin(buckets) & expr, columns=[col]
+            filter=ds.field("term_bucket").isin(self._buckets(essential)) & expr,
+            columns=[col],
         )
         if self.config.compression:
             dec = (
@@ -480,10 +429,9 @@ class SearchEngine:
         if term_predicate and len(terms) <= self.MAX_TERM_PREDICATE:
             blocks = self.postings.filter(self._bucket_filter(terms))
         else:
-            buckets = sorted(
-                {term_bucket_py(t, self.config.n_term_buckets) for t in terms}
+            blocks = self.postings.filter(
+                F.col("term_bucket").isin(self._buckets(terms))
             )
-            blocks = self.postings.filter(F.col("term_bucket").isin(buckets))
         has_range = self._has_block_range
         if candidate_ids is not None and len(candidate_ids) > 0 and has_range:
             ids = [int(x) for x in candidate_ids]
@@ -630,42 +578,37 @@ class SearchEngine:
         algo: str = "daat",
         with_docno: bool = False,
         local: Optional[bool] = None,
-    ) -> DataFrame:
-        """Top-k for a raw query string. Returns (rank, doc_id, score
-        [, docno]). k in {10, 20, 100} in the reference UI (Main.java:58);
-        any positive k accepted here.
+    ) -> SearchResult:
+        """Top-k for a raw query string as a :class:`SearchResult` of
+        (rank, doc_id[, docno], score). k in {10, 20, 100} in the
+        reference UI (Main.java:58); any positive k accepted here.
 
         ``local`` selects the execution path: None (default) auto-gates —
         when the query terms' postings fit the driver RAM gate
         (LOCAL_EXEC_MAX_POSTINGS), score entirely driver-side in numpy
-        with NO Spark job (the analogue of the reference's RAM-resident
-        interactive query path, Query.java:62-72); beyond the gate, or
-        with local=False, the distributed plan runs. Results are
+        and hold the rows driver-side (route ``"local"``: no Spark job,
+        no JVM call, docno from a pyarrow doctable read — the analogue
+        of the reference's RAM-resident interactive query path,
+        Query.java:62-72); beyond the gate, or with local=False, the
+        result wraps the distributed plan. A query with no indexed term
+        is answered driver-side on every route (``"empty"``). Rows are
         bit-identical either way (same formulas, same summation order,
         same tie-break)."""
         terms = self.tokenize_query(query)
         stats = self._term_stats(terms)
         terms = [t for t in terms if t in stats]  # drop unknown terms (J5)
         if not terms:
-            result = self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+            rows = None
         elif self._local_ok(terms, stats, local):
-            result = self._local_df(
-                self._local_topk(terms, stats, scorer, mode, algo, k)
-            )
+            rows = self._local_topk(terms, stats, scorer, mode, algo, k)
         elif mode == "conjunctive":
-            result = self._conjunctive(terms, stats, scorer, k)
+            rows = self._conjunctive(terms, stats, scorer, k)
         elif algo == "maxscore":
-            result = self._maxscore(terms, stats, scorer, k)
+            rows = self._maxscore(terms, stats, scorer, k)
         else:
-            result = self._daat(terms, stats, scorer, k)
-        if with_docno:
-            # broadcast the k-row RESULT and stream the doctable past it
-            result = self.doctable.select("doc_id", "docno").join(
-                F.broadcast(result), "doc_id"
-            ).select("rank", "doc_id", "docno", "score")
-        return result
+            rows = self._daat(terms, stats, scorer, k)
+        result = SearchResult(self.spark, TOPK, rows)
+        return result.with_docno([self]) if with_docno else result
 
     # ---------- driver-local fast path (interactive latency) ----------
 
@@ -681,20 +624,21 @@ class SearchEngine:
     LOCAL_EXEC_MAX_POSTINGS = 2_000_000
 
     def _local_ok(self, terms, stats, override: Optional[bool]) -> bool:
-        if override is False:
-            return False
-        if override is None and self.local_exec is False:
-            return False
-        if self.config.compression and not self._decoded_has_doc_len:
-            # pre-r3 compressed layout: doc_len would need a doctable
-            # join the local path doesn't do
-            return False
-        if override or self.local_exec:
-            return True
-        return (
-            sum(stats[t]["df"] for t in terms)
-            <= self.LOCAL_EXEC_MAX_POSTINGS
+        # pre-r3 compressed layout: doc_len would need a doctable join
+        # the local path doesn't do
+        layout_ok = not (self.config.compression and not self._decoded_has_doc_len)
+        return self._route_local(
+            override, layout_ok, sum(stats[t]["df"] for t in terms)
         )
+
+    def _route_local(self, override, layout_ok: bool, postings: int) -> bool:
+        """The call's ``local=`` beats the engine default (local_exec);
+        a layout the local path cannot read beats both; auto routes
+        locally when ``postings`` fit LOCAL_EXEC_MAX_POSTINGS."""
+        choice = self.local_exec if override is None else override
+        if choice is False or not layout_ok:
+            return False
+        return bool(choice) or postings <= self.LOCAL_EXEC_MAX_POSTINGS
 
     def _local_postings(
         self,
@@ -718,13 +662,9 @@ class SearchEngine:
             vbyte_decode_delta,
         )
 
-        dataset = self._postings_dataset()
-        buckets = sorted(
-            {term_bucket_py(t, self.config.n_term_buckets) for t in terms}
-        )
-        expr = ds.field("term_bucket").isin(buckets) & ds.field("term").isin(
-            list(terms)
-        )
+        dataset = self._dataset("postings")
+        expr = ds.field("term_bucket").isin(self._buckets(terms))
+        expr = expr & ds.field("term").isin(list(terms))
         if block_thresh:
             bm_col = (
                 "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
@@ -800,35 +740,17 @@ class SearchEngine:
             for t, v in out.items()
         }
 
-    def _local_df(self, pdf: pd.DataFrame) -> DataFrame:
-        """Wrap a driver-computed top-k as a LocalRelation via a SQL
-        VALUES clause: collect() is then driver-only — NO Spark job at
-        all (createDataFrame(pandas) builds an ExistingRDD whose collect
-        costs a full Python-worker round-trip, measured ~0.26 s even for
-        k rows). Doubles ride as CAST('<repr>' AS DOUBLE): repr
-        round-trips IEEE754 exactly and parseDouble is correctly
-        rounded, so the scores are bit-identical to the numpy values."""
-        if len(pdf) == 0:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
-        rows = ",".join(
-            f"({int(rank)}, {int(doc_id)}L, CAST('{float(score)!r}' AS DOUBLE))"
-            for rank, doc_id, score in pdf.itertuples(index=False)
-        )
-        return self.spark.sql(
-            f"SELECT * FROM VALUES {rows} AS t(rank, doc_id, score)"
-        )
-
     def _local_topk(
         self, terms, stats, scorer: str, mode: str, algo: str, k: int
-    ) -> pd.DataFrame:
-        """Driver-side numpy scoring — bit-identical to the distributed
-        plan: per-(term, doc) partials use the same double-precision
-        operation order as bm25_partial_expr/tfidf_partial_expr
-        (bm25_partial_py is the documented mirror), and per-doc sums
-        fold addends in sorted-term order exactly like _sum_scores'
-        coalesce chain (0.0 + s == s for the non-negative addends).
+    ) -> dict:
+        """Driver-side numpy scoring into a top-k of (rank, doc_id,
+        score) numpy columns (a SearchResult's local rows) —
+        bit-identical to the distributed plan: per-(term, doc) partials
+        use the same double-precision operation order as
+        bm25_partial_expr/tfidf_partial_expr (bm25_partial_py is the
+        documented mirror), and per-doc sums fold addends in sorted-term
+        order exactly like _sum_scores' coalesce chain (0.0 + s == s for
+        the non-negative addends).
         ``algo='maxscore'`` applies the same metadata theta + block-max
         pruning as _maxscore — the identical exactness argument holds,
         just without a Spark job."""
@@ -850,12 +772,7 @@ class SearchEngine:
             terms, block_thresh=block_thresh, scorer=scorer
         )
         ordered = sorted(set(terms))
-        nonempty = [t for t in ordered if per_term[t][0].size]
-        if not nonempty:
-            return pd.DataFrame(
-                {"rank": [], "doc_id": [], "score": []}
-            ).astype({"rank": "int32", "doc_id": "int64", "score": "float64"})
-        uniq = np.unique(np.concatenate([per_term[t][0] for t in nonempty]))
+        uniq = np.unique(np.concatenate([per_term[t][0] for t in ordered]))
         scores = np.zeros(uniq.size, dtype=np.float64)
         counts = np.zeros(uniq.size, dtype=np.int64)
         for t in ordered:
@@ -876,15 +793,7 @@ class SearchEngine:
             keep &= counts == len(ordered)
         if theta > 0.0:
             keep &= scores >= theta
-        uniq, scores = uniq[keep], scores[keep]
-        order = np.lexsort((uniq, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "rank": np.arange(1, order.size + 1, dtype=np.int32),
-                "doc_id": uniq[order],
-                "score": scores[order],
-            }
-        )
+        return top_k([{"doc_id": uniq[keep], "score": scores[keep]}], "score", k)
 
     def _phrase_local_ok(
         self, terms, stats, override: Optional[bool]
@@ -893,23 +802,17 @@ class SearchEngine:
         int per term occurrence) under the same RAM bound as
         _local_ok's df sum, and a positions layout that carries doc_len
         (every build >= r2)."""
-        if override is False:
-            return False
-        if override is None and self.local_exec is False:
-            return False
-        names = self._positions_dataset().schema.names
-        if "doc_len" not in names:
-            return False
-        if override or self.local_exec:
-            return True
-        return (
-            sum(stats[t]["cf"] for t in set(terms))
-            <= self.LOCAL_EXEC_MAX_POSTINGS
+        return self._route_local(
+            override,
+            "doc_len" in self._dataset("positions").schema.names,
+            sum(stats[t]["cf"] for t in set(terms)),
         )
 
-    def _local_phrase(self, terms, k: int, raw: bool = False):
-        """Driver-side phrase top-k — bit-identical to the distributed
-        phrase plan: identical coverage semantics (a base b matches when
+    def _local_phrase(self, terms) -> tuple[dict, int]:
+        """Driver-side phrase matches as ((doc_id, partial, phrase_tf)
+        numpy columns, phrase_df); :meth:`_phrase_rows` ranks them by
+        the idf-free partial and scales the top k. Bit-identical to the
+        distributed phrase plan: identical coverage semantics (a base b matches when
         every phrase index i has term_i at position b+i), identical
         scoring double-ops (bm25_partial_py mirrors bm25_partial_expr;
         score = partial * log10(n_docs / phrase_df) in the same operand
@@ -930,38 +833,21 @@ class SearchEngine:
         from ..functions.scoring import bm25_partial_py
 
         L = len(terms)
-        dataset = self._positions_dataset()
+        dataset = self._dataset("positions")
         names = dataset.schema.names
         compressed = "positions_vb" in names
-        buckets = sorted(
-            {term_bucket_py(t, self.config.n_term_buckets) for t in set(terms)}
-        )
         cols = ["term", "doc_id", "doc_len"] + (
             ["positions_vb"] if compressed else ["positions"]
         )
         tbl = dataset.to_table(
-            filter=ds.field("term_bucket").isin(buckets)
+            filter=ds.field("term_bucket").isin(self._buckets(set(terms)))
             & ds.field("term").isin(list(set(terms))),
             columns=cols,
         ).combine_chunks()
 
         def empty():
-            if raw:
-                return (
-                    pd.DataFrame(
-                        {"doc_id": [], "partial": [], "phrase_tf": []}
-                    ).astype(
-                        {
-                            "doc_id": "int64",
-                            "partial": "float64",
-                            "phrase_tf": "int64",
-                        }
-                    ),
-                    0,
-                )
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double, phrase_tf int"
-            )
+            none = np.empty(0, np.int64)
+            return {"doc_id": none, "partial": none + 0.0, "phrase_tf": none}, 0
 
         if tbl.num_rows == 0:
             return empty()
@@ -1016,33 +902,19 @@ class SearchEngine:
             self.config.k1,
             self.config.b,
         )
-        hit_docs = docs_unique[hit_idx]
-        order = np.lexsort((hit_docs, -partial))[:k]
-        if raw:
-            # scatter-gather consumers (index/sharded.py) rank globally
-            # on the idf-free partial and attach the GLOBAL phrase_df
-            return (
-                pd.DataFrame(
-                    {
-                        "doc_id": hit_docs[order],
-                        "partial": partial[order],
-                        "phrase_tf": ptf[order].astype(np.int64),
-                    }
-                ),
-                int(phrase_df),
-            )
-        idf = math.log10(float(self.stats["n_docs"]) / phrase_df)
-        score = partial[order] * idf
-        rows = ",".join(
-            f"({r + 1}, {int(d)}L, CAST('{float(s)!r}' AS DOUBLE), {int(tf)})"
-            for r, (d, s, tf) in enumerate(
-                zip(hit_docs[order], score, ptf[order])
-            )
-        )
-        return self.spark.sql(
-            f"SELECT * FROM VALUES {rows} "
-            "AS t(rank, doc_id, score, phrase_tf)"
-        )
+        hit = {"doc_id": docs_unique[hit_idx], "partial": partial, "phrase_tf": ptf}
+        return hit, int(phrase_df)
+
+    @staticmethod
+    def _phrase_rows(parts, phrase_df: int, n_docs, k: int) -> dict:
+        """Phrase top-k from per-index _local_phrase columns (one part
+        per shard): rank by (partial desc, doc_id asc), keep k, then
+        score = partial * log10(n_docs / phrase_df) — the distributed
+        plan's double ops in its order."""
+        top = top_k(parts, "partial", k)
+        idf = math.log10(float(n_docs) / phrase_df) if phrase_df else 0.0
+        top["score"] = top.pop("partial") * idf
+        return top
 
     # ---------- algorithms ----------
 
@@ -1285,15 +1157,20 @@ class SearchEngine:
         k: int = 10,
         local: Optional[bool] = None,
         _raw: bool = False,
-    ):
+    ) -> SearchResult:
         """Exact phrase top-k over the positional index (requires a build
-        with ``positions=True``). A phrase occurrence is a run of the
+        with ``positions=True``) as a :class:`SearchResult` of (rank,
+        doc_id, score, phrase_tf). A phrase occurrence is a run of the
         phrase's terms at consecutive positions of the POST-pipeline
         token sequence (stopwords removed, stems applied) — the standard
-        semantics for a stopped/stemmed index.
+        semantics for a stopped/stemmed index. Routed like search(): a
+        phrase whose positional slices fit the driver gate is matched
+        driver-side (_local_phrase, route ``"local"``, no Spark job); a
+        phrase with an unindexed term is ``"empty"`` on every route.
 
-        ONE positions scan, ONE exchange, all JVM-side: read the phrase
-        terms' bucket-pruned positions rows, shift each term's positions
+        Distributed plan: ONE positions scan, ONE exchange, all
+        JVM-side: read the phrase terms' bucket-pruned positions rows,
+        shift each term's positions
         by its phrase offset (an occurrence at base b means term_i sits
         at b+i; the offset comes from a literal map lookup — no
         broadcast-join of a local relation, which cost an extra exchange
@@ -1324,32 +1201,25 @@ class SearchEngine:
                 "no positional index: build with EngineConfig(positions=True)"
             )
         terms = self.tokenize_phrase(phrase)
-
-        def empty() -> DataFrame:
-            # phrase_tf is int in BOTH the empty and populated paths
-            # (the scored path casts to int below) so callers can
-            # union/compare schemas regardless of whether the phrase
-            # matched. Built lazily — the hot path never pays the
-            # schema-parse/py4j cost of a frame it discards.
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double, phrase_tf int"
-            )
-
-        if not terms:
-            return empty()
         stats = self._term_stats(terms)
-        if any(t not in stats for t in terms):
-            return empty()  # strict: unknown word => phrase cannot occur
+        if not terms or any(t not in stats for t in terms):
+            # strict: unknown word => phrase cannot occur
+            return SearchResult(self.spark, PHRASE)
 
         # driver-local fast path (same design + gate as _local_topk):
         # the phrase terms' positional slices are gated on total cf —
         # one position int per occurrence is the dominant footprint
         if self._phrase_local_ok(terms, stats, local):
-            return self._local_phrase(terms, k, raw=_raw)
+            hit, phrase_df = self._local_phrase(terms)
+            return SearchResult(
+                self.spark,
+                PHRASE,
+                self._phrase_rows([hit], phrase_df, self.stats["n_docs"], k),
+            )
 
         # resolve the positions frame ONCE per engine (directory listing
         # + schema read are driver-side costs a per-query re-read would
-        # pay every time, like postings/doctable in __init__)
+        # pay every time, like postings/doctable in refresh())
         if self._positions_df is None:
             self._positions_df = self.spark.read.parquet(pos_dir)
         # bucket prune (partition-level) + term IN-list (pushed to the
@@ -1476,8 +1346,12 @@ class SearchEngine:
             "doc_id", (F.col("_partial") * idf).alias("score"), "phrase_tf"
         )
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score", "phrase_tf"
+        return SearchResult(
+            self.spark,
+            PHRASE,
+            topk.withColumn("rank", F.row_number().over(w)).select(
+                "rank", "doc_id", "score", "phrase_tf"
+            ),
         )
 
     # ---------- batch (TestPerformance.java analogue) ----------

@@ -42,3 +42,20 @@ def index_dir(spark, corpus, tmp_path_factory):
     shutil.rmtree(d, ignore_errors=True)
     build_index(spark, corpus, d, TEST_CONFIG)
     return d
+
+
+def spark_jobs(spark, search):
+    """Run ``search()`` and collect its result under a job group of its
+    own; return (result, rows, ids of the Spark jobs both started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = search()
+        rows = result.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, rows, list(sc.statusTracker().getJobIdsForGroup(group))

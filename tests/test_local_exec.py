@@ -1,8 +1,8 @@
 """Driver-local fast path (VERDICT r4 "Next round" #3): under the RAM
-gate, search() scores entirely driver-side in numpy with NO Spark job —
-results must be BIT-IDENTICAL to the distributed plan on every
-(mode, algo, scorer) combination and on every index layout (raw,
-compressed, compressed+delta)."""
+gate, search() scores entirely driver-side in numpy and returns driver
+rows — NO Spark job through collect() — results must be BIT-IDENTICAL
+to the distributed plan on every (mode, algo, scorer) combination and
+on every index layout (raw, compressed, compressed+delta)."""
 
 import struct
 
@@ -11,6 +11,7 @@ import pytest
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.index.builder import build_index
 from searchengine_spark.query.engine import SearchEngine
+from tests.conftest import spark_jobs
 
 QUERIES = [
     "spark table join fast",
@@ -78,43 +79,48 @@ def test_local_k100(engine):
     assert _bits(a) == _bits(b)
 
 
-def test_auto_gate_engages_and_produces_local_plan(engine):
-    """At fixture scale the auto gate must engage, and the returned
-    frame must be a LocalRelation — collect() without a Spark job."""
+def test_auto_gate_engages_and_produces_local_plan(spark, engine):
+    """At fixture scale the auto gate must engage, and the result must
+    be driver rows — search and collect() without a Spark job."""
     terms = engine.tokenize_query(QUERIES[0])
     stats = engine._term_stats(terms)
     assert engine._local_ok(terms, stats, None)
-    plan = engine.search(QUERIES[0], k=10)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "LocalTableScan" in plan
-    assert "FileScan" not in plan
+    result, rows, jobs = spark_jobs(spark, lambda: engine.search(QUERIES[0], k=10))
+    assert result.route == "local" and rows
+    assert jobs == []
 
 
-def test_gate_respects_force_off(engine):
-    plan = engine.search(QUERIES[0], k=10, local=False)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "FileScan" in plan
+def test_gate_respects_force_off(spark, engine):
+    result, rows, jobs = spark_jobs(
+        spark, lambda: engine.search(QUERIES[0], k=10, local=False)
+    )
+    assert result.route == "distributed" and rows
+    assert jobs
 
 
-def test_gate_respects_engine_default(engine):
+def test_gate_respects_engine_default(spark, engine):
     engine.local_exec = False
     try:
-        plan = engine.search(QUERIES[0], k=10)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "FileScan" in plan
+        result, rows, jobs = spark_jobs(
+            spark, lambda: engine.search(QUERIES[0], k=10)
+        )
+        assert result.route == "distributed" and rows
+        assert jobs
     finally:
         engine.local_exec = None
 
 
-def test_gate_overflow_falls_back(engine):
+def test_gate_overflow_falls_back(spark, engine):
     """Shrink the gate below the query's df sum: auto must choose the
     distributed plan."""
     old = engine.LOCAL_EXEC_MAX_POSTINGS
     engine.LOCAL_EXEC_MAX_POSTINGS = 0
     try:
-        plan = engine.search(QUERIES[0], k=10)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "FileScan" in plan
+        result, rows, jobs = spark_jobs(
+            spark, lambda: engine.search(QUERIES[0], k=10)
+        )
+        assert result.route == "distributed" and rows
+        assert jobs
     finally:
         del engine.LOCAL_EXEC_MAX_POSTINGS
         assert engine.LOCAL_EXEC_MAX_POSTINGS == old  # class attr intact

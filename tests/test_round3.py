@@ -92,8 +92,10 @@ def compressed_engine(spark, corpus, tmp_path_factory):
 
 
 def test_compressed_query_plan_has_no_doctable_join(compressed_engine):
-    plan = compressed_engine.search("spark table join fast", k=10)._jdf \
-        .queryExecution().executedPlan().toString()
+    # pinned distributed: at fixture scale auto-routing answers locally
+    plan = compressed_engine.search(
+        "spark table join fast", k=10, local=False
+    ).to_spark()._jdf.queryExecution().executedPlan().toString()
     assert "doctable" not in plan, "compressed query still joins the doctable"
 
 
@@ -174,7 +176,7 @@ def test_phrase_schema_identical_matched_vs_empty(spark, corpus, tmp_path_factor
     assert [(f.name, f.dataType) for f in hit.schema] == [
         (f.name, f.dataType) for f in miss.schema
     ]
-    assert hit.unionByName(miss).count() == hit.count()
+    assert hit.to_spark().unionByName(miss.to_spark()).count() == hit.count()
 
 
 # ---------- streaming positional segments ----------
@@ -196,7 +198,7 @@ def test_streaming_compact_with_positions_answers_phrase(
     # (global natural-key) assignment — compare by docno at k=100 (all
     # matching docs at this corpus size) so tie-order can't flake
     def by_docno(eng):
-        res = eng.phrase_search("merge column", k=100)
+        res = eng.phrase_search("merge column", k=100).to_spark()
         rows = eng.doctable.select("doc_id", "docno").join(
             res, "doc_id"
         ).collect()
